@@ -291,13 +291,16 @@ def main() -> None:
     # forcing every headline query onto fresh cached-relation identities
     # (new plans, fresh codegen) — measured +1.5-2 s of per-round re-warm
     # on the as-of query alone, an artifact, not query cost.
-    from trading_etl_spark.queries.datapipe import _CODEBOOK_CACHE, _codebook
-    from trading_etl_spark.queries.trading import clear_candle_caches
+    from trading_etl_spark import cache
+    from trading_etl_spark.queries.datapipe import _codebook
 
+    trading_rels = (
+        "ticks", "ohlc_1h", "ohlc_1h_vol", "fact_sma_1h", "buysell_events_1h"
+    )
     chain_fn = queries["ohlc_derived_multi_tf"]
     cold: list[float] = []
     for _ in range(N_RUNS):
-        clear_candle_caches(spark)
+        cache.clear(spark, "candle_chain", *trading_rels)
         cold.append(run_once(chain_fn))
     runs["candle_chain_cold"] = cold
     canary_burst("post_chain_cold")
@@ -309,21 +312,13 @@ def main() -> None:
     # the chain build; this line measures building those four relations over
     # a WARM chain, so the headline as-of number below is pure steady-state
     # query cost (round 1 previously re-paid this materialization). Each
-    # repeat clears only the downstream caches (_CHAIN_CACHE stays warm);
-    # the last build leaves everything warm for the headline rounds.
+    # repeat clears only the downstream caches (the candle chain stays
+    # warm); the last build leaves everything warm for the headline rounds.
     from trading_etl_spark.queries import trading as trading_mod
 
     cache_cold: list[float] = []
     for _ in range(N_RUNS):
-        trading_mod.clear_caches(
-            (
-                trading_mod._TICKS_CACHE,
-                trading_mod._CANDLE_CACHE,
-                trading_mod._SMA_CACHE,
-                trading_mod._EVENTS_1H_CACHE,
-            ),
-            spark.sparkContext.applicationId,
-        )
+        cache.clear(spark, "ticks", "ohlc_1h", "fact_sma_1h", "buysell_events_1h")
         t0 = time.time()
         # r17: the materializer overlaps the two independent build chains
         # (ticks dedup ∥ candles→SMA→events, guide §2.6) and the relations
@@ -349,7 +344,7 @@ def main() -> None:
     # run leaves the cache warm for the consumers.
     train_cold: list[float] = []
     for _ in range(N_RUNS):
-        _CODEBOOK_CACHE.clear()
+        cache.clear(spark, "codebook")
         t0 = time.time()
         _codebook(spark, sf_dir)  # eager Lloyd loop — no action needed
         train_cold.append(round(time.time() - t0, 3))
@@ -359,15 +354,13 @@ def main() -> None:
     # Cold IVF inverted-list build (r10): corpus cell assignment + norms
     # are index-BUILD state (what FAISS's IndexIVF stores); the warm ANN
     # headline line reads the cached lists, so this line keeps the build
-    # cost measured. clear_caches unpersists the cached relation; the
+    # cost measured. cache.clear unpersists the cached relation; the
     # last build leaves it warm for the headline rounds.
-    from trading_etl_spark.queries.datapipe import _IVF_INDEX_CACHE, _ivf_index
+    from trading_etl_spark.queries.datapipe import _ivf_index
 
     index_cold: list[float] = []
     for _ in range(N_RUNS):
-        trading_mod.clear_caches(
-            (_IVF_INDEX_CACHE,), spark.sparkContext.applicationId
-        )
+        cache.clear(spark, "ivf_index")
         t0 = time.time()
         _ivf_index(spark, sf_dir).write.format("noop").mode("overwrite").save()
         index_cold.append(round(time.time() - t0, 3))
@@ -388,11 +381,10 @@ def main() -> None:
     from trading_etl_spark.queries.datapipe import _docs, _split_shingles
 
     docs_rel = _docs(spark, sf_dir)
-    app_id = spark.sparkContext.applicationId
 
     bands_cold: list[float] = []
     for _ in range(N_RUNS):
-        trading_mod.clear_caches((text_mod._BANDS_REL_CACHE,), app_id)
+        cache.clear(spark, "lsh_bands")
         t0 = time.time()
         text_mod._band_keys_cached(text_mod._shingles_cached(docs_rel))
         bands_cold.append(round(time.time() - t0, 3))
@@ -400,7 +392,7 @@ def main() -> None:
 
     pos_cold: list[float] = []
     for _ in range(N_RUNS):
-        trading_mod.clear_caches((text_mod._POS_REL_CACHE,), app_id)
+        cache.clear(spark, "positions")
         t0 = time.time()
         text_mod._positions_cached(docs_rel, text_mod.EXSUB_K)
         pos_cold.append(round(time.time() - t0, 3))
@@ -415,7 +407,7 @@ def main() -> None:
     )
     bloom_cold: list[float] = []
     for _ in range(N_RUNS):
-        trading_mod.clear_caches((text_mod._BLOOM_CACHE,), app_id)
+        cache.clear(spark, "bloom")
         t0 = time.time()
         text_mod._bloom_cached(test_rel)
         bloom_cold.append(round(time.time() - t0, 3))

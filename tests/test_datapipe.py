@@ -1497,8 +1497,9 @@ def test_mixture_plan_rates_and_epochs(spark):
 
 
 def test_plan_cache_key_reuse_and_isolation(spark, tmp_path):
-    """r12: the shared relation caches key on (appId, semanticHash,
-    exprId-canonicalized plan string). Two invariants:
+    """The plan-keyed session caches key on (semanticHash,
+    exprId-canonicalized plan string) plus the input-file fingerprint. Two
+    invariants:
 
     - REUSE: two independently-built identical plans share ONE cached
       relation — exprIds increment globally per instantiation, so a key
@@ -1527,10 +1528,12 @@ def test_plan_cache_key_reuse_and_isolation(spark, tmp_path):
     assert tx.plan_cache_key(filtered) != tx.plan_cache_key(d1)
     assert tx._shingles_cached(filtered) is not tx._shingles_cached(d1)
 
-    from trading_etl_spark.queries.datapipe import clear_model_caches
+    from trading_etl_spark import cache
 
-    clear_model_caches(spark)
-    assert not tx._SHINGLE_REL_CACHE
+    sh1 = tx._shingles_cached(d1)
+    assert cache.clear(spark, "shingles") >= 2
+    assert tx._shingles_cached(d1) is not sh1
+    cache.clear(spark, "shingles")
 
 
 # --- simplified silhouette (r14) ----------------------------------------------

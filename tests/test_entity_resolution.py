@@ -482,29 +482,27 @@ def test_pos_bound_evaluates_before_bag_in_join_condition(spark):
 
 def test_fuzzy_toks_relation_cached_per_session(spark):
     """The two-pass token relation is train-once per (app, sf_dir) via the
-    shared FIFO registry (r15 self-review: a per-call persist leaked one
-    cached vocabulary relation per invocation) — two calls must reuse the
-    SAME persisted DataFrame and the same measured key-row count, and the
-    shared clear helper must evict it."""
+    session cache (a per-call persist leaked one cached vocabulary relation
+    per invocation) — two calls must reuse the SAME persisted DataFrame and
+    the same measured key-row count, and clearing must unpersist it."""
+    from trading_etl_spark import cache
     from trading_etl_spark.queries import analytics
-    from trading_etl_spark.queries.trading import clear_caches
 
-    clear_caches((analytics._FUZZY_TOKS_CACHE,))
+    cache.clear(None, "fuzzy_toks")
     toks1, rows1 = analytics._fuzzy_toks(spark, SF_DIR)
     toks2, rows2 = analytics._fuzzy_toks(spark, SF_DIR)
     assert toks1 is toks2, "second call rebuilt the relation"
     assert rows1 == rows2 and rows1 > 0
     assert toks1.is_cached
-    assert clear_caches((analytics._FUZZY_TOKS_CACHE,)) == 1
-    assert not analytics._FUZZY_TOKS_CACHE
+    assert cache.clear(None, "fuzzy_toks") == 1
+    assert not toks1.is_cached
 
-    # ADVICE r15: the module-level clear helper (the analytics leg of the
-    # session-wide 'evict everything' trio next to clear_candle_caches /
-    # clear_model_caches) reaches this cache too — an eager sweep that
-    # enumerates the three helpers leaves no persisted relation behind
-    analytics._fuzzy_toks(spark, SF_DIR)
-    assert analytics.clear_analytics_caches(spark) == 1
-    assert not analytics._FUZZY_TOKS_CACHE
+    # a session-wide clear (no namespace named) reaches this cache too, so
+    # an 'evict everything' sweep leaves no persisted relation behind
+    toks3, _ = analytics._fuzzy_toks(spark, SF_DIR)
+    assert toks3 is not toks1 and toks3.is_cached
+    cache.clear(spark)
+    assert not toks3.is_cached
 
 
 def test_rarest_k_recall_tradeoff_on_zipfian_multitoken_names(spark):

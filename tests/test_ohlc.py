@@ -116,22 +116,23 @@ def test_config_added_timeframe_flows_to_ohlc_and_indicators(spark):
     assert "'2h'" in dims.timeframe_values_sql(cfg)
 
 
-def test_clear_candle_caches_evicts_and_unpersists(spark):
+def test_cache_clear_evicts_and_unpersists_candles(spark):
+    from trading_etl_spark import cache
     from trading_etl_spark.queries import trading as tq
 
     base = tq._ohlc_1m(spark, "/root/testdata/sf0.001")
     assert base.storageLevel.useMemory  # chain pair stays a plain cache
-    # the DOWNSTREAM relations are materialized with truncated lineage
-    # (r17): served from the checkpointed RDD, never re-derived
+    # the DOWNSTREAM relations are materialized with truncated lineage:
+    # served from the checkpointed RDD, never re-derived
     hourly = tq._ohlc_1h(spark, "/root/testdata/sf0.001")
     plan = hourly._jdf.queryExecution().executedPlan().toString()
     assert "ExistingRDD" in plan, plan
     assert "Scan parquet" not in plan, plan
-    assert tq._CHAIN_CACHE
-    n = tq.clear_candle_caches(spark)
-    assert n >= 1
-    assert not tq._CHAIN_CACHE and not tq._CANDLE_CACHE
+    assert tq._ohlc_1h(spark, "/root/testdata/sf0.001") is hourly
+    n = cache.clear(spark, "candle_chain", "ohlc_1h")
+    assert n >= 2
     assert not base.storageLevel.useMemory
+    assert tq._ohlc_1h(spark, "/root/testdata/sf0.001") is not hourly
 
 
 def test_candle_gap_fill_flat_candles(spark, tmp_path, monkeypatch):
@@ -152,15 +153,11 @@ def test_candle_gap_fill_flat_candles(spark, tmp_path, monkeypatch):
         "currency_pair_code string, time timestamp, open double, high double,"
         " low double, close double",
     )
-    key = (spark.sparkContext.applicationId, "gap-test")
-    trading._CANDLE_CACHE[key] = candles
-    try:
-        out = {
-            r["time"]: r
-            for r in trading.q_candle_gap_fill(spark, "gap-test").collect()
-        }
-    finally:
-        trading._CANDLE_CACHE.pop(key, None)
+    monkeypatch.setattr(trading, "_ohlc_1h", lambda _spark, _sf_dir: candles)
+    out = {
+        r["time"]: r
+        for r in trading.q_candle_gap_fill(spark, "gap-test").collect()
+    }
     assert len(out) == 3
     gap = out[datetime(2024, 1, 1, 1)]
     assert gap["is_gap"] is True

@@ -82,19 +82,35 @@ def test_partition_layout(spark, warehouse):
     assert any(d.startswith("currency_pair_code=") for d in sub)
 
 
-def test_candle_caches_fifo_bounded(spark):
-    """VERDICT r4 Wrong #5: the materialized-relation caches must not grow
-    unboundedly in a long-lived session — FIFO eviction at the cap."""
-    from trading_etl_spark.queries import trading
+def test_candle_caches_fifo_bounded(spark, tmp_path):
+    """The session cache must not grow unboundedly in a long-lived session:
+    FIFO eviction at the per-namespace cap unpersists the evicted relation,
+    and clear() drops one application's entries only."""
+    from types import SimpleNamespace
 
-    cache = {}
-    for i in range(trading._CACHE_MAX_ENTRIES + 3):
-        df = spark.range(2).cache()
-        df.count()
-        trading._cache_put(cache, ("app", f"sf{i}"), df)
-    assert len(cache) == trading._CACHE_MAX_ENTRIES
-    # oldest keys evicted, newest retained
-    assert ("app", "sf0") not in cache and ("app", "sf2") not in cache
-    assert ("app", f"sf{trading._CACHE_MAX_ENTRIES + 2}") in cache
-    for df in cache.values():
-        df.unpersist()
+    from trading_etl_spark import cache
+
+    ns, n = "test_fifo", cache.MAX_ENTRIES + 3
+
+    def put(i, session=spark):
+        def build():
+            df = spark.range(i + 1).cache()
+            df.count()
+            return df
+
+        return cache.memo(ns, session, (f"sf{i}",), build, str(tmp_path / f"sf{i}"))
+
+    dfs = [put(i) for i in range(n)]
+    # oldest keys evicted and unpersisted, newest retained
+    assert not dfs[0].storageLevel.useMemory and not dfs[2].storageLevel.useMemory
+    assert dfs[n - 1].storageLevel.useMemory
+    assert put(n - 1) is dfs[n - 1]
+    assert put(0) is not dfs[0]  # evicted: rebuilt, which evicts sf3
+
+    other = SimpleNamespace(sparkContext=SimpleNamespace(applicationId="other-app"))
+    assert cache.clear(spark, ns) == cache.MAX_ENTRIES
+    other_df = put(n, other)
+    assert cache.clear(spark, ns) == 0  # another application's entry stays
+    assert put(n, other) is other_df
+    assert cache.clear(None, ns) == 1
+    assert not other_df.storageLevel.useMemory

@@ -67,3 +67,38 @@ def test_backtest_pnl_buy_then_sell(spark):
     # BUY @110 (golden), SELL @95 (dead) → one trade, pnl −15
     assert r["n_trades"] == 1
     assert r["total_pnl"] == -15.0
+
+
+def test_event_reaction_avg_bid_rounds_exact_half_up(spark, monkeypatch):
+    """The 5-minute mean bid 159.8380375 sits on a half at the 7th decimal;
+    as a double it is 159.83803749999998, which round(avg(bid), 6) takes
+    down to .838037. The fixed-point mean rounds the exact value half up
+    to .838038, and the Spark query and the DuckDB oracle agree on it."""
+    import duckdb
+
+    from trading_etl_spark.queries import trading
+
+    t0 = datetime(2024, 1, 2, 10)
+    events = spark.createDataFrame(
+        [(t0, "USD/JPY", "BUY")],
+        "event_datetime timestamp, currency_pair_code string, event_type string",
+    )
+    ticks = spark.createDataFrame(
+        [
+            ("USD/JPY", datetime(2024, 1, 2, 10, 0, 10), 159.838036),
+            ("USD/JPY", datetime(2024, 1, 2, 10, 1, 40), 159.838039),
+            ("USD/JPY", datetime(2024, 1, 2, 10, 9), 150.0),  # after the window
+        ],
+        "currency_pair_code string, time timestamp, bid double",
+    )
+    monkeypatch.setattr(trading, "_buysell_events_1h", lambda _s, _d: events)
+    monkeypatch.setattr(trading, "_ticks", lambda _s, _d: ticks)
+
+    (row,) = trading.q_event_reaction(spark, "hand-built").collect()
+    assert row["n_ticks"] == 2
+    assert row["avg_bid"] == 159.838038
+    bids = "(159.838036::DOUBLE), (159.838039::DOUBLE)"
+    oracle = duckdb.sql(
+        f"SELECT {trading._AVG_BID6_SQL} FROM (VALUES {bids}) t(bid)"
+    ).fetchone()[0]
+    assert float(oracle) == 159.838038

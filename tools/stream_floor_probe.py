@@ -91,7 +91,7 @@ def main() -> None:
             deadline = time.time() + 60
             while time.time() < deadline:
                 p = q.lastProgress
-                if p and p["numInputRows"] >= 0 and p["batchId"] >= i:
+                if p and p["batchId"] >= i:
                     break
                 time.sleep(0.1)
         time.sleep(2)  # let the final batch's progress land
@@ -112,7 +112,8 @@ def main() -> None:
     ]
     seen = {}
     for bid, trig, add, nrows in rows:
-        seen[bid] = (trig, add, nrows)
+        if trig is not None and add is not None:  # a progress event may lack either
+            seen[bid] = (trig, add, nrows)
     print("batch  triggerExecution_ms  addBatch_ms  rows")
     for bid in sorted(seen):
         trig, add, nrows = seen[bid]

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
+
 N_QUERIES = 16  # vec_id < 16 are the demo query vectors
 TOP_K = 3
 
@@ -1136,33 +1138,25 @@ def srp_banded(
     ).select("vec_id", F.posexplode("keys").alias("band_idx", "band_key"))
 
 
-# FIFO-bounded session cache for the banded SRP signature relation
-# (vec_id, band_idx, band_key) (r18): the same persisted-LSH-index
-# discipline as text._band_keys_cached — FOUR query paths (near-dup LSH
-# pairs, dup-graph PageRank, triangle stats, keeper centrality) each
-# re-ran the SRP projection UDF over the whole corpus per call, and the
-# banded self-join referenced it TWICE per plan. The index relation is
-# built once per (app, emb plan, banding params) and served materialized;
-# cleared via clear_model_caches with the other similarity caches.
-_SRP_BANDED_CACHE: dict[tuple, DataFrame] = {}
-
-
 def _srp_banded_cached(
     emb: DataFrame,
     dim: int = EMB_DIM,
     n_bands: int = SRP_BANDS,
     band_bits: int = SRP_BAND_BITS,
 ) -> DataFrame:
-    from ..operators.text import plan_cache_key
-    from ..queries.trading import _cache_put, _materialize
+    """The banded SRP signature relation (vec_id, band_idx, band_key), the
+    persisted LSH index of the embedding family: four query paths (near-dup
+    LSH pairs, dup-graph PageRank, triangle stats, keeper centrality) read
+    it, and the banded self-join references it twice per plan."""
+    from .text import _plan_memo
 
-    key = (*plan_cache_key(emb), dim, n_bands, band_bits)
-    df = _SRP_BANDED_CACHE.get(key)
-    if df is None:
-        df = _materialize(srp_banded(emb, dim=dim, n_bands=n_bands,
-                                     band_bits=band_bits))
-        _cache_put(_SRP_BANDED_CACHE, key, df)
-    return df
+    return _plan_memo(
+        "srp_bands", emb,
+        lambda: cache.materialize(
+            srp_banded(emb, dim=dim, n_bands=n_bands, band_bits=band_bits)
+        ),
+        dim, n_bands, band_bits,
+    )
 
 
 def embedding_near_dup_lsh(

@@ -17,6 +17,7 @@ import math as _math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import cache
 from ..io import first_wins
 from ..operators import indicators, ohlc, signals
 from ..operators.asof import asof_join_backward_bucketed, asof_join_forward_bucketed
@@ -30,84 +31,19 @@ LOOKBACK = "2024-01-14 20:00:00"  # W2 recompute-window start (cursor − lookba
 
 # --- Spark-side builders -----------------------------------------------------
 
-# The reference materializes every OHLC table once, and all downstream
-# consumers read the materialized tables (transform.py flow ordering). The
-# in-session equivalent is caching the chain per (app, sf_dir): the tick
-# scan + dedup + base/derived aggs run once, and the ~10 consumer queries
-# (derived, fanout, pivot, cube, rollup, indicators, signals, backtest)
-# read the cached candle relations. At 100 TB these are written parquet
-# tables; candle rows are ~3 orders of magnitude smaller than ticks, so
-# the cache is small relative to the input.
-_CHAIN_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-# Bound for every materialized-relation cache below (VERDICT r4 Wrong #5:
-# unbounded process-lifetime caches are a footgun for a long-lived embedding
-# session). FIFO eviction: dicts preserve insertion order, the oldest entry
-# is unpersisted and dropped once a cache would exceed the cap — evicting a
-# relation a consumer still holds is safe (Spark just recomputes it).
-_CACHE_MAX_ENTRIES = 8
+# The reference materializes every intermediate once (the ticker table, the
+# OHLC tables, fact_sma, signal events) and every later flow reads those
+# tables (transform.py flow ordering). The in-session analog is one
+# session-cache entry per relation and sf_dir, keyed on the events table:
+# the tick scan, dedup and candle aggs run once, and the consumer queries
+# (derived, fanout, pivot, cube, rollup, indicators, signals, backtest,
+# as-of) read the cached relations. Candle rows are ~3 orders of magnitude
+# fewer than ticks, so the cache is small next to the input.
 
 
-def _materialize(df: DataFrame) -> DataFrame:
-    """Materialize a session relation AND truncate its lineage
-    (``localCheckpoint(eager=True)``) instead of a bare ``.cache()``.
-
-    Why (r17, guide §5/§3.3): these relations are the in-session analog of
-    the reference's materialized tables, and every consumer query's
-    DataFrame is REBUILT per run — with ``.cache()`` the consumer still
-    carries the full analyzed tree of the chain (tick scan → dedup → candle
-    aggs → SMA windows → signal events), so each build/plan pass re-analyzes
-    hundreds of nodes before the cache lookup even applies. Measured at
-    sf0.1 (quiet host, min-of-3): event_asof_tick build+plan 0.68 s → 0.21 s
-    and exec 2.09 s → 1.08 s; the whole cache-consumer family halved.
-    ``localCheckpoint`` cuts the plan to a LogicalRDD scan of the
-    materialized partitions — same rows, same session lifetime as the old
-    cache. Eager, so the build cost lands at materialization time (exactly
-    what the bench's cold lines measure). On a cluster deploy, executor
-    loss invalidates a local checkpoint — production writes these relations
-    as real tables (the reference's discipline); in-session serving is
-    identical either way. Eviction: dropping the entry releases the
-    DataFrame, and the ContextCleaner frees the checkpoint blocks on GC
-    (the relations are candle-sized, so transient overlap is MBs)."""
-    return df.localCheckpoint(eager=True)
-
-
-def _unpersist_entry(entry) -> None:
-    for df in entry if isinstance(entry, tuple) else (entry,):
-        try:
-            df.unpersist()
-        except Exception:
-            pass  # non-DF member / session already stopped
-
-
-def _cache_put(cache: dict, key, value) -> None:
-    while len(cache) >= _CACHE_MAX_ENTRIES:
-        _unpersist_entry(cache.pop(next(iter(cache))))
-    cache[key] = value
-
-
-def clear_caches(caches, app_id: str | None = None) -> int:
-    """Shared eviction loop for every materialized-relation/model cache:
-    unpersist + drop all entries (optionally only one session's)."""
-    evicted = 0
-    for cache in caches:
-        for key in [k for k in cache if app_id is None or k[0] == app_id]:
-            _unpersist_entry(cache.pop(key))
-            evicted += 1
-    return evicted
-
-
-def clear_candle_caches(spark: SparkSession | None = None) -> int:
-    """Unpersist and drop every cached candle relation (optionally only the
-    given session's). The caches are keyed per (applicationId, sf_dir),
-    FIFO-bounded at ``_CACHE_MAX_ENTRIES`` (so a long-lived session can't
-    accumulate unboundedly), and this clears them eagerly. Returns the
-    number of entries evicted."""
-    app_id = spark.sparkContext.applicationId if spark is not None else None
-    return clear_caches(
-        (_CHAIN_CACHE, _CANDLE_CACHE, _TICKS_CACHE, _SMA_CACHE, _EVENTS_1H_CACHE,
-         _VOL_CANDLE_CACHE),
-        app_id,
+def _session_rel(namespace: str, spark: SparkSession, sf_dir: str, build, *params):
+    return cache.memo(
+        namespace, spark, (sf_dir, *params), build, f"{sf_dir}/events.parquet"
     )
 
 
@@ -115,80 +51,54 @@ def candle_chain(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame
     """(1m, derived) candles via the single-shuffle chain (ohlc.py): dedup,
     base agg, and derived agg share one (pair, 4h-bucket) partitioning.
 
-    Public API (VERDICT r4 task #4): the SQL catalog (catalog.register_views)
-    builds its ohlc_1m / ohlc_all_tf views from this, and every in-module
-    consumer query reads through it so the chain runs once per (app, sf_dir).
+    Public API: the SQL catalog (catalog.register_views) builds its
+    ohlc_1m / ohlc_all_tf views from this, and every in-module consumer
+    query reads through it so the chain runs once per (app, sf_dir).
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pair = _CHAIN_CACHE.get(key)
-    if pair is None:
-        # ONE config read feeds both the dim relation and the driver-local
-        # duration list (ADVICE r17: two independent from_env() reads could
-        # in principle diverge mid-call; the durations MUST come from the
-        # same config as the timeframes or the LCM buckets on the wrong
-        # grid)
+
+    def build():
+        # one config read feeds both the dim relation and the driver-local
+        # duration list: the durations must come from the same config as
+        # the timeframes, or the LCM buckets on the wrong grid
         cfg = dims.EngineConfig.from_env()
         base, derived = ohlc.ohlc_chain_single_shuffle(
             ticks.raw_ticks(spark, sf_dir),
             dims.dim_timeframe(spark, cfg),
-            # driver-local duration list from the SAME config object as the
-            # dim relation — skips the per-build 6-row collect (r17, §5)
             durations=dims.timeframe_durations(cfg),
         )
-        # The chain pair stays a plain .cache(): one consumer action
-        # materializes base AND derived in a single fused job (derived's
-        # plan reads base's InMemoryRelation), which an eager checkpoint
-        # pair would split into two jobs + a double store — measured
-        # +1.3 s on the candle_chain_cold build at sf0.1 (r17). The deep
-        # consumer stacks are truncated one level down instead
-        # (_ohlc_1h/_fact_sma/_buysell_events go through _materialize),
-        # so chain consumers' plans stay shallow anyway.
-        pair = (base.cache(), derived.cache())
-        _cache_put(_CHAIN_CACHE, key, pair)
-    return pair
+        # A plain .cache(), not materialize(): one consumer action fills
+        # base AND derived in a single fused job (derived's plan reads
+        # base's InMemoryRelation), where an eager checkpoint pair would
+        # split it into two jobs and store twice. The deep consumer stacks
+        # are truncated one level down instead (_ohlc_1h, _fact_sma_1h and
+        # _buysell_events_1h are materialized).
+        return base.cache(), derived.cache()
+
+    return _session_rel("candle_chain", spark, sf_dir, build)
 
 
 def _ohlc_1m(spark: SparkSession, sf_dir: str) -> DataFrame:
     return candle_chain(spark, sf_dir)[0]
 
 
-# The reference materializes OHLC into tables BEFORE indicators read them
-# (transform.py flow ordering: update_ohlc_tables → indicator flow). The 1h
-# candle relation is likewise materialized here — cached per (app, sf_dir) —
-# so the 6 indicator/signal/backtest queries (and the two sides of the SMA
-# self-join) reuse one tick-scan+dedup+agg chain instead of re-deriving it
-# per union branch. At 100 TB this is a written parquet table; in-session,
-# cache() is the equivalent.
-_CANDLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-# The deduped tick relation IS a materialized table in the reference
-# (ticker.ticker_{pair}); every consumer below reads that table, so the
-# in-session analog is one cached dedup instead of re-scanning + re-deduping
-# raw events per query. ~1 row/s/pair ⇒ 3 orders of magnitude smaller than
-# the raw feed; at 100 TB this is the written ticker parquet table.
-_TICKS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _TICKS_CACHE.get(key)
-    if df is None:
-        df = _materialize(ticks.load_ticks(spark, sf_dir))
-        _cache_put(_TICKS_CACHE, key, df)
-    return df
+    """The deduped tick relation: the reference's ticker.ticker_{pair}
+    table, read by every tick-level consumer."""
+    return _session_rel(
+        "ticks", spark, sf_dir,
+        lambda: cache.materialize(ticks.load_ticks(spark, sf_dir)),
+    )
 
 
 def _ohlc_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _CANDLE_CACHE.get(key)
-    if df is None:
+    """1h candles, read by the indicator/signal/backtest queries (and both
+    sides of the SMA self-join)."""
+
+    def build():
         tf_1h = dims.dim_timeframe(spark).filter(F.col("timeframe_code") == "1h")
-        df = _materialize(ohlc.ohlc_derived(_ohlc_1m(spark, sf_dir), tf_1h))
-        _cache_put(_CANDLE_CACHE, key, df)
-    return df
+        return cache.materialize(ohlc.ohlc_derived(_ohlc_1m(spark, sf_dir), tf_1h))
 
-
-_VOL_CANDLE_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return _session_rel("ohlc_1h", spark, sf_dir, build)
 
 
 def _ohlc_1h_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -196,13 +106,11 @@ def _ohlc_1h_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries no traded volume), aggregated straight off the cached deduped
     ticks: the volume-weighted indicator family (OBV, VWAP) needs volume,
     which the shared volume-less candle chain deliberately drops. One
-    (pair, hour) hash-agg with map-side partials; cached like the other
-    session-materialized relations (r11-born)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _VOL_CANDLE_CACHE.get(key)
-    if df is None:
+    (pair, hour) hash-agg with map-side partials."""
+
+    def build():
         t = _ticks(spark, sf_dir)
-        df = (
+        return cache.materialize(
             t.groupBy(
                 "currency_pair_code",
                 F.date_trunc("hour", "time").alias("time"),
@@ -216,56 +124,40 @@ def _ohlc_1h_vol(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("timeframe_code", F.lit("1h"))
         )
-        df = _materialize(df)
-        _cache_put(_VOL_CANDLE_CACHE, key, df)
-    return df
 
-
-# fact_sma IS a materialized table in the reference (transform_services.py
-# writes it before any signal/backtest query reads it) — cache the in-session
-# analog so the 5 signal/backtest/asof/reaction consumers reuse one SMA
-# window pass instead of re-deriving it from the candle cache each.
-_SMA_CACHE: dict[tuple[str, str, tuple[int, ...]], DataFrame] = {}
+    return _session_rel("ohlc_1h_vol", spark, sf_dir, build)
 
 
 def _fact_sma_1h(spark: SparkSession, sf_dir: str, periods: list[int]) -> DataFrame:
     """SMA facts on 1h candles, values rounded to 6dp so the cross predicate
-    decides identically in both engines."""
-    key = (spark.sparkContext.applicationId, sf_dir, tuple(periods))
-    cached = _SMA_CACHE.get(key)
-    if cached is not None:
-        return cached
-    candles = _ohlc_1h(spark, sf_dir)
-    parts = [
-        indicators.sma(candles, p).withColumn("value", F.round("value", 6))
-        for p in periods
-    ]
-    df = parts[0]
-    for part in parts[1:]:
-        df = df.unionByName(part)
-    df = _materialize(df)
-    _cache_put(_SMA_CACHE, key, df)
-    return df
+    decides identically in both engines. fact_sma is a written table in the
+    reference, read by every signal/backtest/as-of/reaction consumer."""
 
+    def build():
+        candles = _ohlc_1h(spark, sf_dir)
+        parts = [
+            indicators.sma(candles, p).withColumn("value", F.round("value", 6))
+            for p in periods
+        ]
+        df = parts[0]
+        for part in parts[1:]:
+            df = df.unionByName(part)
+        return cache.materialize(df)
 
-# The buy/sell signal events are read by 6+ consumers (backtests, the three
-# as-of variants, the reaction window) and — since the r7 as-of horizon
-# prune — TWICE per as-of plan (once as the probe union side, once as the
-# 1-row min/max bounds aggregate). The relation is tiny (hundreds of rows);
-# caching it makes the bounds pass a sub-ms scan instead of a re-derivation
-# of the whole signal window chain.
-_EVENTS_1H_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return _session_rel("fact_sma_1h", spark, sf_dir, build, tuple(periods))
 
 
 def _buysell_events_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _EVENTS_1H_CACHE.get(key)
-    if cached is None:
-        cached = _materialize(
+    """Buy/sell signal events, read by 6+ consumers and twice per as-of
+    plan (the probe side and the 1-row min/max bounds aggregate): cached,
+    the bounds pass is a sub-ms scan instead of a re-derivation of the
+    signal window chain."""
+    return _session_rel(
+        "buysell_events_1h", spark, sf_dir,
+        lambda: cache.materialize(
             signals.buysell_events(_fact_sma_1h(spark, sf_dir, [14, 28]), 14, 28)
-        )
-        _cache_put(_EVENTS_1H_CACHE, key, cached)
-    return cached
+        ),
+    )
 
 
 def materialize_trading_relations(spark: SparkSession, sf_dir: str) -> None:
@@ -278,7 +170,7 @@ def materialize_trading_relations(spark: SparkSession, sf_dir: str) -> None:
     - signal events (warm chain → 1h candles → SMA facts → buy/sell events).
 
     Both roots share only the already-warm chain/parquet footers; their
-    jobs touch disjoint caches. Eager materialization (``_materialize``)
+    jobs touch disjoint caches. Eager materialization (``cache.materialize``)
     computes every row, so no separate action is needed. Used by the
     bench's candle_cache_cold line and by any session warm-up; measured at
     sf0.1 the overlap takes the cold build from ~2.9 s (serial) to the
@@ -619,6 +511,18 @@ def q_dead_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     return signals.dead_cross(_fact_sma_1h(spark, sf_dir, [14, 28]), 14, 28)
 
 
+# avg(bid) rounded half-up to 6dp, exactly and identically in both engines:
+# the same integer fixed-point recipe as vwap_daily_1h. Each bid is
+# quantized to 1e-6 units and summed as BIGINT, so the sum does not depend
+# on reduction order, and (2·sum + n) div (2·n) is the exact half-up
+# rounding of the rational mean. A double avg() rounded with each engine's
+# round() differs in the 6th decimal when the mean lands on a half.
+_AVG_BID6_SQL = (
+    "CAST((2 * sum(CAST(floor(t.bid * 1000000.0 + 0.5) AS BIGINT)) + count(*))"
+    " // (2 * count(*)) AS BIGINT) / 1000000.0"
+)
+
+
 def q_event_reaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval join: for each signal event, the tick activity in the 5
     minutes that follow (bucketized range join — equi-join, no cross
@@ -634,8 +538,11 @@ def q_event_reaction(spark: SparkSession, sf_dir: str) -> DataFrame:
         left_on="event_datetime", right_on="time",
         by=["currency_pair_code"], lower_seconds=0, upper_seconds=300,
     )
-    return j.groupBy("event_datetime", "currency_pair_code", "event_type").agg(
-        F.count("*").alias("n_ticks"), F.round(F.avg("bid"), 6).alias("avg_bid")
+    avg_bid6 = F.expr("(2 * sum(_bid_fp) + count(*)) div (2 * count(*))") / 1000000.0
+    return (
+        j.withColumn("_bid_fp", F.floor(F.col("bid") * 1000000.0 + 0.5))
+        .groupBy("event_datetime", "currency_pair_code", "event_type")
+        .agg(F.count("*").alias("n_ticks"), avg_bid6.alias("avg_bid"))
     )
 
 
@@ -1935,7 +1842,7 @@ ASOF LEFT JOIN ticks tf
     + f""",
 sig_events AS ({_GOLDEN_SQL} UNION ALL {_DEAD_SQL})
 SELECT e.event_datetime, e.currency_pair_code, e.event_type,
-       count(*) AS n_ticks, round(avg(t.bid), 6) AS avg_bid
+       count(*) AS n_ticks, {_AVG_BID6_SQL} AS avg_bid
 FROM sig_events e
 JOIN ticks t
   ON t.currency_pair_code = e.currency_pair_code
